@@ -18,8 +18,9 @@ import java.nio.file.{Files, Paths}
   *    listed in `"failures"`, is printed to stderr with its message,
   *    and the process exits nonzero. A query that fails in one pass
   *    is not retried in later passes.
-  *  - the JSON line goes to stdout AND to a file
-  *    (`SPARK_GRAFT_BENCH_OUT`, default `/root/repo/bench_out.json`).
+  *  - the JSON line goes to stdout AND to `<out>_c<cpus>.json`, plus
+  *    `<out>.json` itself on 32 cores (`<out>.json` is
+  *    `SPARK_GRAFT_BENCH_OUT`, default `bench_out.json` in the repo).
   *    Launch via `scripts/bench.sh` (spark-submit) so stdout carries
   *    zero sbt `[info]`/`[success]` decoration.
   */
@@ -89,19 +90,18 @@ object Bench {
     // `"parsed": null`. The short line carries the headline numbers
     // whole; the full record rides the file (and mid-stream for
     // humans).
-    // r17 (VERDICT r16 next-round #2): the driver's 8-core scaling leg
-    // re-runs this main with the SAME default outPath and CLOBBERED the
-    // 32-core per-query artifact (PERF_r16 per_query came up empty). A
-    // cpu-count-suffixed copy makes every core-count's full per-query
-    // map survive side by side; the un-suffixed path stays byte-for-byte
-    // what it always was, so nothing downstream changes.
+    // Every run writes a cpu-count-suffixed copy, so each core count's
+    // per-query map survives side by side; the un-suffixed record is
+    // the 32-core run's alone — an 8-core scaling leg re-running this
+    // main with the same default outPath would otherwise overwrite it.
     val outCpu = (if (outPath.endsWith(".json"))
         outPath.stripSuffix(".json") else outPath) + s"_c$cpus.json"
+    val outs = (if (cpus == "32") Seq(outPath) else Nil) :+ outCpu
     val summary =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${names.size},"n_failed":${failed.size},"cpus":$cpus,"sf":"$sfDir","runs_per_query":$runs,"full":"$outPath","full_cpu":"$outCpu"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${names.size},"n_failed":${failed.size},"cpus":$cpus,"sf":"$sfDir","runs_per_query":$runs,"full":"${outs.head}","full_cpu":"$outCpu"}"""
     println(summary)
     println(json)
-    for (p <- Seq(outPath, outCpu))
+    for (p <- outs)
       try Files.writeString(Paths.get(p), json + "\n")
       catch { case e: Throwable => System.err.println(s"[bench] could not write $p: ${e.getMessage}") }
     spark.stop()

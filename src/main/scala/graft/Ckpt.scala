@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graftbridge.CheckpointStats
+import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Lineage-cut policy for iterative plans.
   *
@@ -13,30 +16,42 @@ import org.apache.spark.sql.graftbridge.CheckpointStats
   * `SPARK_GRAFT_CHECKPOINT_DIR` env var), cut lineage with a reliable
   * `checkpoint()` to that directory; otherwise fall back to
   * `localCheckpoint` as the local-mode fast path. Every iterative
-  * operator routes through [[cut]], so the policy is one switch.
+  * operator routes through [[cutWith]] (or [[cut]], its metric-free
+  * form), so the policy is one switch.
   */
 object Ckpt {
-  def cut(df: DataFrame): DataFrame = {
+  def cut(df: DataFrame): DataFrame = cutWith(df)._1
+
+  private val observeSeq = new java.util.concurrent.atomic.AtomicLong
+
+  /** [[cut]] that also returns `metrics` computed by the cut's own
+    * materialization (no extra job): the returned row holds the exact
+    * row count at index 0, then `metrics` in order. A null numeric
+    * metric (a `sum` over zero rows) reads as 0.
+    *
+    * The metrics ride one uniquely named `observe`. The eager
+    * checkpoint has executed the observed frame's physical plan, so
+    * its `queryExecution.observedMetrics` already holds them —
+    * read synchronously, no listener involved.
+    *
+    * The row count also grounds the cut leaf's statistics
+    * ([[CheckpointStats.withFreshStats]]): the inherited size estimate
+    * compounds geometrically across self-join rounds, while for
+    * all-fixed-width schemas count × UnsafeRow width is the frame's
+    * true byte size, so a genuinely small per-round state broadcasts
+    * in its next join instead of inheriting the block manager's
+    * java-object-inflated memSize (measured ~9× on 2-long label rows:
+    * 12.6 MB reported for a 1.4 MB frame — just over the broadcast
+    * threshold, turning every per-round self-join into a 2-exchange
+    * sort-merge join).
+    */
+  def cutWith(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
     val spark = df.sparkSession
+    val name = s"graft_cut_${observeSeq.incrementAndGet()}"
+    val observed = df.observe(name, count(lit(1)).as("n"), metrics: _*)
     val dir = Option(spark.conf.get("spark.graft.checkpointDir", null))
       .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
-    // withFreshStats: replace the inherited (geometrically compounding
-    // across self-join rounds) size estimate with the checkpoint's
-    // real materialized size — see graftbridge.CheckpointStats. An
-    // exact row count rides the SAME materialization action as an
-    // observe metric (no extra job): for all-fixed-width schemas
-    // count × UnsafeRow width is the frame's true byte size, so a
-    // genuinely small per-round state broadcasts in its next join
-    // instead of inheriting the block manager's java-object-inflated
-    // memSize (measured ~9× on 2-long label rows: 12.6 MB reported
-    // for a 1.4 MB frame — just over the broadcast threshold, turning
-    // every per-round self-join into a 2-exchange sort-merge join).
-    val rowObs = if (df.isStreaming) None
-      else Some(org.apache.spark.sql.Observation())
-    val observed = rowObs.map(o => df.observe(o,
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))).getOrElse(df)
-    dir match {
+    val cp = dir match {
       case Some(d) if d.nonEmpty =>
         // setCheckpointDir appends a session UUID; re-point only when
         // the configured ROOT actually changed (comparing path-only,
@@ -45,12 +60,22 @@ object Ckpt {
         val engaged = spark.sparkContext.getCheckpointDir
           .exists(c => new org.apache.hadoop.fs.Path(c).toUri.getPath.startsWith(want))
         if (!engaged) spark.sparkContext.setCheckpointDir(d)
-        CheckpointStats.withFreshStats(observed.checkpoint(eager = true),
-          rowObs.flatMap(o => CheckpointStats.observedCount(o)))
-      case _ =>
-        CheckpointStats.withFreshStats(observed.localCheckpoint(eager = true),
-          rowObs.flatMap(o => CheckpointStats.observedCount(o)))
+        observed.checkpoint(eager = true)
+      case _ => observed.localCheckpoint(eager = true)
     }
+    val raw = observed.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(
+        s"Ckpt.cutWith: observe metrics '$name' missing after the eager checkpoint"))
+    val row = new GenericRowWithSchema(raw.toSeq.zip(raw.schema.fields).map {
+      case (null, f) => f.dataType match {
+        case LongType => 0L
+        case DoubleType => 0.0
+        case _: DecimalType => java.math.BigDecimal.ZERO
+        case _ => null
+      }
+      case (v, _) => v
+    }.toArray, raw.schema)
+    (CheckpointStats.withFreshStats(cp, row.getLong(0)), row)
   }
 
   /** [[cut]] elided when the frame is ALREADY a materialized

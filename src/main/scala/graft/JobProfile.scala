@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import scala.jdk.CollectionConverters._
 
 /** Dev-only per-query execution profile: runs the named queries (with
   * the bench's session shape and timing action) and reports, per query,
@@ -31,7 +32,8 @@ object JobProfile {
     val tasks = new AtomicInteger; val taskMs = new AtomicLong
     val shufW = new AtomicLong; val shufR = new AtomicLong
     // per-stage tally for the current pass (GRAFT_PROFILE_STAGES=1):
-    // (stage name head, tasks, taskMs, shW) — names the hot stage
+    // (stage name head, tasks, taskMs, shW) — names the hot stage;
+    // the best pass's tally is the one printed
     val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int, Long, Long)]()
     val dumpStages = sys.env.get("GRAFT_PROFILE_STAGES").contains("1")
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -55,6 +57,7 @@ object JobProfile {
     for ((name, fn) <- names) {
       var best = Double.MaxValue
       var bj = 0; var bs = 0; var bt = 0; var btm = 0L; var bw = 0L
+      var bestStages = Seq.empty[(String, Int, Long, Long)]
       for (_ <- 1 to passes) {
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); shufW.set(0); shufR.set(0)
         stageRows.clear()
@@ -63,14 +66,14 @@ object JobProfile {
         val t = (System.nanoTime() - t0) / 1e9
         spark.catalog.clearCache()
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        Thread.sleep(300) // let async listener events drain
+        org.apache.spark.sql.graftbridge.ListenerBus.drain(spark.sparkContext)
         if (t < best) { best = t; bj = jobs.get; bs = stages.get; bt = tasks.get
-          btm = taskMs.get; bw = shufW.get }
+          btm = taskMs.get; bw = shufW.get
+          bestStages = stageRows.asScala.toSeq }
       }
       println(f"$name%-28s $best%8.2f $bj%5d $bs%5d $bt%6d ${btm / 1000.0}%7.1f ${bw / 1e6}%7.1f")
       if (dumpStages) {
-        import scala.jdk.CollectionConverters._
-        stageRows.asScala.toSeq.sortBy(-_._3).take(12).foreach {
+        bestStages.sortBy(-_._3).take(12).foreach {
           case (nm, t, ms, w) =>
             println(f"    [stage] ${ms / 1000.0}%7.2fs $t%5dt ${w / 1e6}%8.2fMB  $nm")
         }

@@ -32,13 +32,11 @@ object GraphOps {
     * ONE job: the convergence sum rides the checkpoint materialization
     * itself as an `observe` metric (`CollectMetrics` accumulates
     * during the same action that writes the checkpoint — no second
-    * scan, no second job). If the metric hasn't surfaced within the
-    * wait bound (the listener is asynchronous), a fallback scan of the
-    * just-checkpointed blocks recovers it — never a wrong answer,
-    * at worst the old 2-job round. Stops when no row changed or
-    * `maxRounds` is hit. Round N−1's checkpoint storage is released
-    * ([[Ckpt.release]]) as soon as round N has materialized, so a
-    * long loop holds at most two rounds of state.
+    * scan, no second job; [[Ckpt.cutWith]] reads it synchronously).
+    * Stops when no row changed or `maxRounds` is hit. Round N−1's
+    * checkpoint storage is released ([[Ckpt.release]]) as soon as
+    * round N has materialized, so a long loop holds at most two
+    * rounds of state.
     */
   def iterate(init: DataFrame, maxRounds: Int)(step: DataFrame => DataFrame): DataFrame =
     iterateCore(init, maxRounds)(step)._1
@@ -74,35 +72,13 @@ object GraphOps {
     var done = false
     while (!done && round < maxRounds) {
       round += 1
-      val obs = org.apache.spark.sql.Observation()
-      val nextCut = Ckpt.cut(step(cur)
-        .observe(obs, coalesce(sum(col("__changed")), lit(0L)).as("c")))
-      val changed = awaitObserved(obs).getOrElse(
-        nextCut.agg(coalesce(sum(col("__changed")), lit(0L))).first().getLong(0))
+      val (nextCut, m) = Ckpt.cutWith(step(cur), sum(col("__changed")))
       Ckpt.release(curCut)
       curCut = nextCut
       cur = nextCut.drop("__changed")
-      done = changed == 0
+      done = m.getLong(1) == 0
     }
     (cur, done)
-  }
-
-  /** Poll an [[org.apache.spark.sql.Observation]] whose observed query
-    * has already executed eagerly; the completion listener is async,
-    * so allow a short grace period before falling back. */
-  private def awaitObserved(obs: org.apache.spark.sql.Observation,
-                            timeoutMs: Long = 2000): Option[Long] = {
-    val deadline = System.nanoTime + timeoutMs * 1000000L
-    while (System.nanoTime < deadline) {
-      val m = org.apache.spark.sql.graftbridge.ObservationBridge.getOrEmpty(obs)
-      if (m.nonEmpty) return Some(m("c") match {
-        case l: java.lang.Long => l.longValue()
-        case i: java.lang.Integer => i.longValue()
-        case other => other.toString.toLong
-      })
-      Thread.sleep(2)
-    }
-    None
   }
 
   /** MONOTONE iteration (r16 optimization round) for relaxation-shaped
@@ -168,19 +144,11 @@ object GraphOps {
             when(col(valueCol) <=> col("__pv"), 0L).otherwise(1L))
           .drop("__pv")
       }
-    def observed(df: DataFrame, obs: org.apache.spark.sql.Observation): DataFrame =
-      df.observe(obs, count(lit(1)).as("n"),
-        sum(col(valueCol).cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("s"))
-    def metricsOf(obs: org.apache.spark.sql.Observation,
-                  cut: DataFrame): (Long, String) =
-      awaitObservedPair(obs).getOrElse {
-        val r = cut.agg(count(lit(1)),
-          sum(col(valueCol).cast(org.apache.spark.sql.types.DecimalType(38, 0)))).first()
-        (r.getLong(0), String.valueOf(r.get(1)))
-      }
-    val obs0 = org.apache.spark.sql.Observation()
-    var curCut = Ckpt.cut(observed(init, obs0))
-    var prev = metricsOf(obs0, curCut)
+    // (row count, Σ value) of each round's state; Row equality
+    // compares the decimal sum by value, never by scale
+    def cutCounted(df: DataFrame) = Ckpt.cutWith(df,
+      sum(col(valueCol).cast(org.apache.spark.sql.types.DecimalType(38, 0))))
+    var (curCut, prev) = cutCounted(init)
     var used = 0
     var done = false
     while (!done && used < maxSteps) {
@@ -188,9 +156,7 @@ object GraphOps {
       used += s
       var nxt: DataFrame = curCut
       for (_ <- 1 to s) nxt = hop(nxt)
-      val obs = org.apache.spark.sql.Observation()
-      val nextCut = Ckpt.cut(observed(nxt, obs))
-      val cur = metricsOf(obs, nextCut)
+      val (nextCut, cur) = cutCounted(nxt)
       done = cur == prev
       prev = cur
       Ckpt.release(curCut)
@@ -199,39 +165,16 @@ object GraphOps {
     (curCut, done)
   }
 
-  /** [[awaitObserved]] for the (n, s) metric pair; the decimal sum is
-    * normalized to a string so null/scale differences cannot produce
-    * a spurious inequality. */
-  private def awaitObservedPair(obs: org.apache.spark.sql.Observation,
-                                timeoutMs: Long = 2000): Option[(Long, String)] = {
-    val deadline = System.nanoTime + timeoutMs * 1000000L
-    while (System.nanoTime < deadline) {
-      val m = org.apache.spark.sql.graftbridge.ObservationBridge.getOrEmpty(obs)
-      if (m.nonEmpty) {
-        val n = m("n") match {
-          case l: java.lang.Long => l.longValue()
-          case i: java.lang.Integer => i.longValue()
-          case other => other.toString.toLong
-        }
-        return Some((n, String.valueOf(m("s"))))
-      }
-      Thread.sleep(2)
-    }
-    None
-  }
-
   /** Bounded iteration for monotonically shrinking frames (e.g.
     * repeated pruning): converges when the row count stops moving.
     * The count rides the checkpoint materialization itself as an
     * `observe` metric — the same single-action-per-round structure as
-    * [[iterate]]; the fallback count() job only fires if the async
-    * metric hasn't surfaced in time (never a wrong answer).
+    * [[iterate]].
     */
   def iterateToFixpoint(init: DataFrame, maxRounds: Int)(step: DataFrame => DataFrame): DataFrame = {
     def cutCounted(df: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cut = Ckpt.cut(df.observe(obs, count(lit(1)).as("c")))
-      (cut, awaitObserved(obs).getOrElse(cut.count()))
+      val (cut, m) = Ckpt.cutWith(df)
+      (cut, m.getLong(0))
     }
     var (cur, n) = cutCounted(init)
     var prev = -1L
@@ -563,12 +506,10 @@ object GraphOps {
   def connectedComponents(edges: DataFrame): DataFrame = {
     // the initial edge count rides the sym cut's own materialization
     // as an observe metric — no separate count() job (r16)
-    val obs0 = org.apache.spark.sql.Observation()
-    val sym = Ckpt.cut(edges.select("src", "dst")
-      .union(edges.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-      .observe(obs0, count(lit(1)).as("c")))
+    val (sym, m0) = Ckpt.cutWith(edges.select("src", "dst")
+      .union(edges.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     var g = sym
-    var edgeCount = awaitObserved(obs0).getOrElse(g.count())
+    var edgeCount = m0.getLong(0)
     var level = 0
     var mappings = List.empty[DataFrame] // most-contracted level first
     while (edgeCount > 0 && level < 32) {
@@ -592,7 +533,6 @@ object GraphOps {
               .cast("int").as("__changed"))
       }
       mappings ::= roots
-      val obs = org.apache.spark.sql.Observation()
       val contracted = g
         .join(roots.select(col("node").as("src"), col("lbl").as("rs")), Seq("src"))
         .join(roots.select(col("node").as("dst"), col("lbl").as("rd")), Seq("dst"))
@@ -600,8 +540,9 @@ object GraphOps {
         .filter(col("src") =!= col("dst"))
         .distinct()
       val prevG = g
-      g = Ckpt.cut(contracted.observe(obs, count(lit(1)).as("c")))
-      edgeCount = awaitObserved(obs).getOrElse(g.count())
+      val (gNext, m) = Ckpt.cutWith(contracted)
+      g = gNext
+      edgeCount = m.getLong(0)
       if (prevG ne sym) Ckpt.release(prevG)
     }
     if (mappings.isEmpty) return vertices(sym).select(col("node"), col("node").as("component"))
@@ -784,15 +725,12 @@ object GraphOps {
         .join(flagged.filter(col("isin")).select(col("node").as("dst")), "dst")
         .select(col("src").as("node")).distinct()
         .withColumn("iso", lit(true))
-      val obs = org.apache.spark.sql.Observation()
-      val next = Ckpt.cut(flagged.join(outs, Seq("node"), "left")
+      val (next, m) = Ckpt.cutWith(flagged.join(outs, Seq("node"), "left")
         .select(col("node"), col("pri"),
-          when(col("isin"), "i").when(col("iso"), "o").otherwise("u").as("st"))
-        .observe(obs, coalesce(sum((col("st") === "u").cast("long")), lit(0L)).as("c")))
+          when(col("isin"), "i").when(col("iso"), "o").otherwise("u").as("st")),
+        sum((col("st") === "u").cast("long")))
       parts += next.filter(col("st") =!= "u").select("node", "st")
-      val left = awaitObserved(obs).getOrElse(
-        next.filter(col("st") === "u").count())
-      empty = left == 0
+      empty = m.getLong(1) == 0
       val nextU = next.filter(col("st") === "u")
       val nextE = Ckpt.cut(e2
         .join(nextU.select(col("node").as("src")), "src", "left_semi")
@@ -848,15 +786,12 @@ object GraphOps {
       matched += mt
       val mn = mt.select(col("a").as("node"))
         .unionByName(mt.select(col("b").as("node"))).distinct()
-      val obs = org.apache.spark.sql.Observation()
-      val nextRem = Ckpt.cut(rem
+      val (nextRem, m) = Ckpt.cutWith(rem
         .join(mn.select(col("node").as("a")), Seq("a"), "left_anti")
-        .join(mn.select(col("node").as("b")), Seq("b"), "left_anti")
-        .observe(obs, count(lit(1)).as("c")))
-      val left = awaitObserved(obs).getOrElse(nextRem.count())
+        .join(mn.select(col("node").as("b")), Seq("b"), "left_anti"))
       Ckpt.release(rem)
       rem = nextRem
-      empty = left == 0
+      empty = m.getLong(0) == 0
     }
     matched.result().reduce(_ unionByName _).select("a", "b")
   }
@@ -913,13 +848,11 @@ object GraphOps {
         .join(undec.select(col("node").as("dst"), col("pri").as("vpri")), "dst")
         .groupBy("src").agg(max("vpri").as("mx"))
         .select(col("src").as("node"), col("mx"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = Ckpt.cut(undec.join(mx, Seq("node"), "left")
+      val (next, m) = Ckpt.cutWith(undec.join(mx, Seq("node"), "left")
         .select(col("node"), col("pri"),
-          (col("mx").isNull || col("mx") < col("pri")).as("isin"))
-        .observe(obs, coalesce(sum((!col("isin")).cast("long")), lit(0L)).as("c")))
+          (col("mx").isNull || col("mx") < col("pri")).as("isin")),
+        sum((!col("isin")).cast("long")))
       out += next.filter(col("isin")).select("node").withColumn("color", lit(c.toLong))
-      val left = awaitObserved(obs).getOrElse(next.filter(!col("isin")).count())
       val nextU = next.filter(!col("isin"))
       val nextE = Ckpt.cut(e2
         .join(nextU.select(col("node").as("src")), "src", "left_semi")
@@ -927,7 +860,7 @@ object GraphOps {
       Ckpt.release(e2) // prior state cuts stay: `out` filters over them
       state = next
       e2 = nextE
-      empty = left == 0
+      empty = m.getLong(1) == 0
     }
     (out.result() :+ state.filter(!col("isin")).select("node")
         .withColumn("color", lit(-1L)))
@@ -1254,7 +1187,7 @@ object GraphOps {
       // loop's idle executors, roughly halving this phase's wall time
       // at any scale. No shared mutable state: Ckpt.cut /
       // CheckpointStats are stateless over distinct frames and each
-      // loop owns its Observations.
+      // cut observes under its own unique name.
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       import scala.concurrent.duration.Duration

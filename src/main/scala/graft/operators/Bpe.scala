@@ -93,8 +93,7 @@ object Bpe {
       // (r16): previously every round paid a separate isEmpty job
       // plus a deferred head() job per round — 3 jobs per merge
       // instead of 1 (t20's 8-merge training ran 65 stage-jobs).
-      val obs = org.apache.spark.sql.Observation()
-      val top = graft.Ckpt.cut(cur
+      val (top, obs) = graft.Ckpt.cutWith(cur
         .select(col("cnt"), expr(symsExpr).as("syms"))
         // sequence(1, 0) counts DOWN in Spark — filter the index list
         // instead so single-symbol words contribute no pairs
@@ -106,53 +105,32 @@ object Bpe {
         .agg(sum("cnt").as("cnt"))
         .orderBy(col("cnt").desc, col("a"), col("b"))
         .limit(1)
-        .select(lit(rk.toLong).as("rk"), col("a"), col("b"), col("cnt"))
-        .observe(obs, count(lit(1)).as("n"),
-          max(struct(col("a"), col("b"), col("cnt"))).as("m")))
-      observedMerge(obs, top, rk) match {
-        case None => exhausted = true // vocabulary fully merged early
-        case Some(m) =>
-          merges += m
-          cur = cur
-            .crossJoin(broadcast(top.select(col("a").as("__ma"), col("b").as("__mb"))))
-            .withColumn("seg", expr(
-              "replace(seg, concat(chr(1), __ma, chr(2), chr(1), __mb, chr(2)), " +
-                "concat(chr(1), __ma, __mb, chr(2)))"))
-            .drop("__ma", "__mb")
-          if (rk % ckptEvery == 0) {
-            val cut = graft.Ckpt.cut(cur)
-            // the superseded cut can never be read again once its
-            // successor is materialized — release its storage, or a
-            // 32k-merge run keeps nMerges/K full vocabulary copies live
-            lastCut.foreach(graft.Ckpt.release)
-            lastCut = Some(cut)
-            cur = cut
-          }
-          rk += 1
+        .select(lit(rk.toLong).as("rk"), col("a"), col("b"), col("cnt")),
+        max(struct(col("a"), col("b"), col("cnt"))))
+      // obs = (rows, the row's (a, b, cnt)); no row = nothing left to merge
+      if (obs.getLong(0) == 0L) exhausted = true // vocabulary fully merged early
+      else {
+        val m = obs.getStruct(1)
+        merges += Merge(rk.toLong, m.getString(0), m.getString(1), m.getLong(2))
+        cur = cur
+          .crossJoin(broadcast(top.select(col("a").as("__ma"), col("b").as("__mb"))))
+          .withColumn("seg", expr(
+            "replace(seg, concat(chr(1), __ma, chr(2), chr(1), __mb, chr(2)), " +
+              "concat(chr(1), __ma, __mb, chr(2)))"))
+          .drop("__ma", "__mb")
+        if (rk % ckptEvery == 0) {
+          val cut = graft.Ckpt.cut(cur)
+          // the superseded cut can never be read again once its
+          // successor is materialized — release its storage, or a
+          // 32k-merge run keeps nMerges/K full vocabulary copies live
+          lastCut.foreach(graft.Ckpt.release)
+          lastCut = Some(cut)
+          cur = cut
+        }
+        rk += 1
       }
     }
     (merges.result(), cur)
-  }
-
-  /** The round's (a, b, cnt) from the cut's observe metrics — the
-    * values were computed by the materializing job itself; only if the
-    * async listener misses the grace window does the head() fallback
-    * run a (tiny, 1-row-leaf) job. None = empty round (exhausted). */
-  private def observedMerge(obs: org.apache.spark.sql.Observation,
-                            top: DataFrame, rk: Int): Option[Merge] = {
-    val deadline = System.nanoTime + 2000L * 1000000L
-    while (System.nanoTime < deadline) {
-      val m = org.apache.spark.sql.graftbridge.ObservationBridge.getOrEmpty(obs)
-      if (m.nonEmpty) {
-        val n = m("n").toString.toLong
-        if (n == 0L) return None
-        val r = m("m").asInstanceOf[org.apache.spark.sql.Row]
-        return Some(Merge(rk.toLong, r.getString(0), r.getString(1), r.getLong(2)))
-      }
-      Thread.sleep(2)
-    }
-    top.head(1).headOption.map(r =>
-      Merge(r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
   }
 
   /** (word → pieces) map from a trained segmentation frame: the

@@ -165,19 +165,22 @@ object Dedup {
     // construction); the struct's remaining fields are a deterministic
     // total-order tiebreak, never the window's partition-order one.
     else {
+      // caller names are quoted, never parsed: a column named `a.b`
+      // is that column, not field b of a struct a
+      def ref(c: String) = col("`" + c.replace("`", "``") + "`")
       val others = df.columns.filterNot(bucketCols.contains).toSeq
       val fields = // heap key first, each source column exactly once
         if (others.contains(ordCol)) ordCol +: others.filterNot(_ == ordCol)
         else ordCol +: others
       val tk = org.apache.spark.sql.graftbridge.BoundedTopK
-        .bounded_topk(maxBucket, struct(fields.map(col): _*))
+        .bounded_topk(maxBucket, struct(fields.map(ref): _*))
       df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-          bucketCols.map(col): _*)
-        .groupBy(bucketCols.map(col): _*)
+          bucketCols.map(ref): _*)
+        .groupBy(bucketCols.map(ref): _*)
         .agg(tk.as("__tk"))
-        .select(bucketCols.map(col) :+ explode(col("__tk")).as("__e"): _*)
+        .select(bucketCols.map(ref) :+ explode(col("__tk")).as("__e"): _*)
         .select(df.columns.toSeq.map(c =>
-          if (bucketCols.contains(c)) col(c) else col(s"__e.$c").as(c)): _*)
+          if (bucketCols.contains(c)) ref(c) else col("__e").getField(c).as(c)): _*)
     }
 
   /** Dictionary-encode each distinct token set as a 64-bit mask when

@@ -2266,9 +2266,11 @@ object VersionedTable {
     // defaults exactly as enforceConstraints does), replacing the
     // separate commit-sized read-back scan. The widened helper columns
     // are projected away before toPhysical, so the written files are
-    // byte-identical. Listener timeout (or a constraint set that
-    // changed under the write) falls back to publishStaged's scan —
-    // never a skipped gate.
+    // byte-identical. The write's own queryExecution holds stale
+    // metrics, so they are read from the Observation's listener-fed
+    // future, with one bounded wait. A timeout (or a constraint set
+    // that changed under the write) falls back to publishStaged's
+    // scan — never a skipped gate.
     val declaredAtWrite = constraintsOf(spark, root, base).toSeq.sortBy(_._1)
     val cObs =
       if (declaredAtWrite.isEmpty) None
@@ -2291,31 +2293,29 @@ object VersionedTable {
           .select(df.columns.toSeq.map(topCol): _*)
     }
     val dfPhysW = toPhysical(dfObserved, cm)
-    dfPhysW.write.parquet(dataDir.toString)
-    val preValidated: Option[Map[String, String]] = cObs.flatMap { obs =>
-      awaitObservedMetrics(obs).map { m =>
-        def asLong(v: Any): Long = v match {
-          case l: java.lang.Long => l.longValue()
-          case i: java.lang.Integer => i.longValue()
-          case other => other.toString.toLong
+    // nothing references the staged files until publishStaged: any
+    // failure before it drops them
+    val (preValidated, written) = try {
+      dfPhysW.write.parquet(dataDir.toString)
+      val pre = cObs.flatMap { obs =>
+        scala.util.Try(scala.concurrent.Await.result(obs.future,
+            scala.concurrent.duration.Duration(2, "s"))).toOption.map { m =>
+          // metrics are (__c0 .. __c{k-1}, __n); a sum over zero rows is null
+          def asLong(i: Int): Long = if (m.isNullAt(i)) 0L else m.getLong(i)
+          val total = asLong(declaredAtWrite.size)
+          failConstraints(declaredAtWrite.zipWithIndex.flatMap { case ((n, _), i) =>
+            val v = asLong(i)
+            if (v > 0) Some((n, v, total)) else None
+          }, root, "write")
+          declaredAtWrite.toMap
         }
-        val total = asLong(m("__n"))
-        val bad = declaredAtWrite.zipWithIndex.flatMap { case ((n, _), i) =>
-          val v = asLong(m(s"__c$i"))
-          if (v > 0) Some((n, v, total)) else None
-        }
-        if (bad.nonEmpty) {
-          f.delete(dataDir, true)
-          failConstraints(bad, root, "write")
-        }
-        declaredAtWrite.toMap
       }
-    }
-    val writtenStatus = f.listStatus(dataDir)
-      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-    val written = writtenStatus
-      .map(st => s"data/c${base + 1}-$nonce/${st.getPath.getName}")
-      .toSeq.zip(writtenStatus.map(_.getLen).toSeq)
+      val writtenStatus = f.listStatus(dataDir)
+        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+      (pre, writtenStatus
+        .map(st => s"data/c${base + 1}-$nonce/${st.getPath.getName}")
+        .toSeq.zip(writtenStatus.map(_.getLen).toSeq))
+    } catch { case e: Throwable => f.delete(dataDir, true); throw e }
     publishStaged(spark, root, written, df.schema, dfPhys.schema, cm,
       meta, expectBase, carriedLines, unionWithPrev, effStats,
       cleanupDirs = Seq(dataDir), constraintsPreValidated = preValidated)
@@ -2444,21 +2444,6 @@ object VersionedTable {
       byName.get(nm).map(j => s"$rel\t$j")
         .getOrElse(s"""$rel\t{"#bytes":${sizeByName(nm)}}""")
     }
-  }
-
-  /** Poll an [[org.apache.spark.sql.Observation]] whose observed query
-    * has already executed eagerly (the constraint-on-write fold); the
-    * completion listener is async, so allow a short grace period and
-    * return None (→ the read-back constraint scan) rather than block. */
-  private def awaitObservedMetrics(obs: org.apache.spark.sql.Observation,
-                                   timeoutMs: Long = 2000): Option[Map[String, Any]] = {
-    val deadline = System.nanoTime + timeoutMs * 1000000L
-    while (System.nanoTime < deadline) {
-      val m = org.apache.spark.sql.graftbridge.ObservationBridge.getOrEmpty(obs)
-      if (m.nonEmpty) return Some(m)
-      Thread.sleep(2)
-    }
-    None
   }
 
   private def publishStaged(spark: SparkSession, root: String,
@@ -2930,34 +2915,6 @@ object VersionedTable {
     * exactly the vectors of its version. Same OCC/retry contract as
     * [[merge]]. Returns the committed version — or the CURRENT version
     * unchanged when nothing matches (no empty commits). */
-  /** Non-blocking read of the (row count, distinct-file set) metrics
-    * the DV paths attach to their hits materialization. The eager
-    * localCheckpoint has already run; the completion listener is
-    * async, so poll briefly and return None (→ the pre-r16 fallback
-    * jobs) rather than block the driver. */
-  private def observedCountAndSet(obs: org.apache.spark.sql.Observation,
-                                  timeoutMs: Long = 2000): Option[(Long, Seq[String])] = {
-    val deadline = System.nanoTime + timeoutMs * 1000000L
-    while (System.nanoTime < deadline) {
-      val m = org.apache.spark.sql.graftbridge.ObservationBridge.getOrEmpty(obs)
-      if (m.nonEmpty) {
-        val n = m("n") match {
-          case l: java.lang.Long => l.longValue()
-          case i: java.lang.Integer => i.longValue()
-          case other => other.toString.toLong
-        }
-        val fs = m("fs") match {
-          case s: scala.collection.Seq[_] => s.map(String.valueOf).toSeq
-          case a: Array[_] => a.map(String.valueOf).toSeq
-          case _ => return None // unexpected shape: use the fallback jobs
-        }
-        return Some((n, fs))
-      }
-      Thread.sleep(2)
-    }
-    None
-  }
-
   def deleteWhereDv(spark: SparkSession, root: String, predicate: String,
                     maxRetries: Int = 5): Long = {
     val f = fs(spark, root)
@@ -2979,19 +2936,14 @@ object VersionedTable {
             .select(col("file").as("__dvf"), col("pos").as("__dvp")).distinct(),
           Seq("__dvf", "__dvp"), "left_anti")
       // the hit count and the touched-file set ride the hits
-      // materialization as observe metrics (r16): the count replaces
-      // the separate isEmpty job and collect_set replaces the
-      // distinct().collect() job — both bounded exactly as before
-      // (touched files are manifest-bounded). The old jobs remain as
-      // the listener-timeout fallback.
-      val hitObs = org.apache.spark.sql.Observation()
-      val hits = liveRows.filter(predicate)
-        .select(col("__dvf").as("file"), col("__dvp").as("pos"))
-        .observe(hitObs, count(lit(1)).as("n"),
-          collect_set(col("file")).as("fs"))
-        .localCheckpoint(true) // consumed twice below
-      val obsHit = observedCountAndSet(hitObs)
-      if (obsHit.map(_._1 == 0L).getOrElse(hits.isEmpty)) return s.version
+      // materialization (consumed twice below) as observe metrics
+      // (r16): the count replaces a separate isEmpty job and
+      // collect_set a distinct().collect() job (touched files are
+      // manifest-bounded)
+      val (hits, hm) = graft.Ckpt.cutWith(liveRows.filter(predicate)
+        .select(col("__dvf").as("file"), col("__dvp").as("pos")),
+        collect_set(col("file")))
+      if (hm.getLong(0) == 0L) { graft.Ckpt.release(hits); return s.version }
       val nonce = java.util.UUID.randomUUID.toString.take(8)
       val dvDirRel = s"data/c${s.version + 1}-$nonce-dv"
       val dvDir = new Path(root, dvDirRel)
@@ -3000,10 +2952,8 @@ object VersionedTable {
       val dvRels = f.listStatus(dvDir)
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map(st => s"$dvDirRel/${st.getPath.getName}").sorted.toSeq
-      // touched-file list is manifest-bounded (distinct rel paths)
-      val touched = obsHit.map(_._2.sorted).getOrElse(
-        hits.select("file").distinct()
-          .collect().map(_.getString(0)).sorted.toSeq)
+      graft.Ckpt.release(hits)
+      val touched = hm.getSeq[String](1).sorted
       val newDvLines = for (t <- touched; d <- dvRels) yield s"!dv\t$t\t$d"
       val metaLines = manifestMeta(spark, root, s.version).toSeq.sortBy(_._1)
         .map { case (k, v2) => s"#$k=$v2" }
@@ -3072,13 +3022,9 @@ object VersionedTable {
           Seq("__dvf", "__dvp"), "left_anti")
       // hit count + touched-file set ride the materialization as
       // observe metrics — see deleteWhereDv (r16)
-      val hitObs = org.apache.spark.sql.Observation()
-      val hits = liveRows.filter(predicate)
-        .observe(hitObs, count(lit(1)).as("n"),
-          collect_set(col("__dvf")).as("fs"))
-        .localCheckpoint(true)
-      val obsHit = observedCountAndSet(hitObs)
-      if (obsHit.map(_._1 == 0L).getOrElse(hits.isEmpty)) return s.version
+      val (hits, hm) = graft.Ckpt.cutWith(liveRows.filter(predicate),
+        collect_set(col("__dvf")))
+      if (hm.getLong(0) == 0L) { graft.Ckpt.release(hits); return s.version }
       val nonce = java.util.UUID.randomUUID.toString.take(8)
       // the matched positions become a deletion vector…
       val dvDirRel = s"data/c${s.version + 1}-$nonce-dv"
@@ -3087,9 +3033,7 @@ object VersionedTable {
       val dvRels = f.listStatus(new Path(root, dvDirRel))
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map(st => s"$dvDirRel/${st.getPath.getName}").sorted.toSeq
-      val touched = obsHit.map(_._2.sorted).getOrElse(
-        hits.select(col("__dvf")).distinct()
-          .collect().map(_.getString(0)).sorted.toSeq)
+      val touched = hm.getSeq[String](1).sorted
       val newDvLines = for (t <- touched; d <- dvRels) yield s"!dv\t$t\t$d"
       // …and the updated row versions land as fresh files. All set
       // expressions are evaluated against the PRE-update row in one
@@ -3111,6 +3055,7 @@ object VersionedTable {
       val cmU = columnMapping(spark, root, s.version)
       val updatedPhys = toPhysical(updated, cmU)
       updatedPhys.write.parquet(new Path(root, dataDirRel).toString)
+      graft.Ckpt.release(hits)
       val newStatus = f.listStatus(new Path(root, dataDirRel))
         .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
       val newLines = newStatus.map(st =>

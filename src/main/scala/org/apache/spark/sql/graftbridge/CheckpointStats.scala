@@ -30,14 +30,6 @@ import org.apache.spark.sql.execution.LogicalRDD
   * rounds. Lives under `org.apache.spark.sql` for the `private[sql]`
   * `Dataset.ofRows` constructor.
   */
-/** Non-blocking read of an [[org.apache.spark.sql.Observation]] —
-  * `getOrEmpty` is `private[sql]`, and the public `get` blocks with no
-  * timeout, which a driver loop must never do. */
-object ObservationBridge {
-  def getOrEmpty(obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    obs.getOrEmpty
-}
-
 object CheckpointStats {
   private val Cap = BigInt(1L) << 40 // 1 TiB: never-broadcast, never-compounding
 
@@ -51,38 +43,6 @@ object CheckpointStats {
         Some(BigInt(fs.getContentSummary(path).getLength)).filter(_ > 0)
       } catch { case _: Throwable => None }
     }
-
-  /** Non-blocking read of the row-count metric [[graft.Ckpt.cut]]
-    * attaches to the checkpoint materialization. The action has
-    * already run eagerly; the completion listener is async, so poll
-    * briefly and fall back to None (→ memSize path) rather than
-    * block the driver. */
-  def observedCount(obs: org.apache.spark.sql.Observation,
-                    timeoutMs: Long = 2000): Option[Long] = {
-    val deadline = System.nanoTime + timeoutMs * 1000000L
-    while (System.nanoTime < deadline) {
-      val m = obs.getOrEmpty
-      if (m.nonEmpty) return Some(m("n") match {
-        case l: java.lang.Long => l.longValue()
-        case i: java.lang.Integer => i.longValue()
-        case other => other.toString.toLong
-      })
-      Thread.sleep(2)
-    }
-    // r17 (ADVICE r16): the metric normally lands in single-digit ms —
-    // hitting this timeout means the listener bus is lagging/dropping
-    // and stats silently degrade to the memSize path. Log ONCE per JVM
-    // so a bus-lag regression is visible without flooding a loop that
-    // calls this every round.
-    if (timeoutFallbackLogged.compareAndSet(false, true))
-      System.err.println(s"[graft] CheckpointStats.observedCount: observe " +
-        s"metric missing after ${timeoutMs} ms — listener bus lagging; " +
-        "falling back to block-manager sizes (logged once)")
-    None
-  }
-
-  private val timeoutFallbackLogged =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Exact UnsafeRow byte width when EVERY column is a fixed-width
     * atomic type (stored inline: null bitset word(s) + 8 bytes per
@@ -104,7 +64,9 @@ object CheckpointStats {
     else Some(8L * ((output.size + 63) / 64) + 8L * output.size)
   }
 
-  def withFreshStats(cp: DataFrame, rowCount: Option[Long] = None): DataFrame = {
+  /** `cp` with its leaf statistics rebuilt from `rowCount`, the exact
+    * row count `graft.Ckpt.cutWith` observed on the materialization. */
+  def withFreshStats(cp: DataFrame, rowCount: Long): DataFrame = {
     val classic = cp.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     classic.queryExecution.analyzed match {
       case lr: LogicalRDD =>
@@ -112,8 +74,7 @@ object CheckpointStats {
         // exact bytes (count × UnsafeRow width) for fixed-width rows;
         // the block manager's memSize otherwise (java-object inflated
         // ~5-10× on narrow rows, but never an underestimate)
-        val exact = for (n <- rowCount; w <- fixedRowWidth(lr.output))
-          yield BigInt(n) * w
+        val exact = fixedRowWidth(lr.output).map(BigInt(rowCount) * _)
         val measured = exact
           .orElse(spark.sparkContext.getRDDStorageInfo
             .find(_.id == lr.rdd.id)
@@ -121,7 +82,7 @@ object CheckpointStats {
             .filter(_ > 0))
           .orElse(checkpointFileSize(classic, lr))
         val stats = Statistics(sizeInBytes = measured.getOrElse(Cap).min(Cap).max(1),
-          rowCount = rowCount.map(BigInt(_)))
+          rowCount = Some(BigInt(rowCount)))
         org.apache.spark.sql.classic.Dataset.ofRows(spark,
           new LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
             lr.outputOrdering, lr.isStreaming, lr.stream)(spark, Some(stats), None))

@@ -5,6 +5,7 @@ package graft
 // checkpoint statistics and the DV paths' observe-metric fold.
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointStats
 
 /** Honest checkpoint statistics: a [[Ckpt.cut]] leaf whose schema is
   * all fixed-width must carry EXACT statistics — row count (ridden on
@@ -69,6 +70,35 @@ class CheckpointStatsSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), plan.take(800))
     Ckpt.release(cut)
   }
+
+  // Ckpt.cutWith reads its metrics synchronously from the observed
+  // frame's queryExecution after the eager checkpoint: the row must be
+  // there under AQE on and off, on the local and the reliable path,
+  // for empty and non-empty inputs, with a null (empty) sum read as 0.
+  for (aqe <- Seq(true, false); reliable <- Seq(false, true))
+    test(s"cutWith metrics row (aqe=$aqe, reliable=$reliable): exact count, empty sum 0") {
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      if (reliable) spark.conf.set("spark.graft.checkpointDir",
+        java.nio.file.Files.createTempDirectory("cutwith").toString)
+      try for (n <- Seq(0L, 50L)) {
+        val groups = math.min(n, 7L)
+        // a shuffle, so AQE has stages to re-plan
+        val (cut, m) = Ckpt.cutWith(spark.range(n)
+          .groupBy((col("id") % 7).as("g")).agg(sum("id").as("s")),
+          sum(col("s")))
+        assert(m.length == 2, m.toString)
+        assert(m.getLong(0) == groups, s"n=$n: $m")
+        assert(m.getLong(1) == n * (n - 1) / 2, s"n=$n: $m")
+        assert(statsOf(cut).rowCount.contains(BigInt(groups)), s"n=$n")
+        assert(CheckpointStats.checkpointFileOf(cut).isDefined == reliable)
+        assert(cut.count() == groups)
+        Ckpt.release(cut)
+      } finally {
+        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        spark.conf.unset("spark.graft.checkpointDir")
+      }
+    }
 }
 
 /** The DV delete/update paths fold their isEmpty probe and the

@@ -66,6 +66,15 @@ class CapBucketsHeapSpec extends SparkSpec {
       ("y", "k1", "pq"), ("y", "k9", "pz")), got.toString)
   }
 
+  test("dotted column names are columns, not struct paths") {
+    val df = Seq((1L, 3L, "c"), (1L, 1L, "a"), (1L, 2L, "b"), (2L, 9L, "z"))
+      .toDF("b.k", "o.rd", "p.x").repartition(2)
+    val got = operators.Dedup.capBuckets(df, Seq("b.k"), "o.rd", 2)
+    assert(got.columns.toSeq == df.columns.toSeq)
+    assert(got.as[(Long, Long, String)].collect().sorted.toSeq ==
+      Seq((1L, 1L, "a"), (1L, 2L, "b"), (2L, 9L, "z")))
+  }
+
   test("maxBucket <= 0 disables the cap") {
     val df = Seq((1L, 2L)).toDF("b", "m")
     assert(operators.Dedup.capBuckets(df, Seq("b"), "m", 0) eq df)
@@ -142,5 +151,42 @@ class FusedCommitGateSpec extends SparkSpec {
       .as[(Long, Long)].collect().sorted.toSeq
     assert(after == before, "violating commit must leave the table unchanged")
     assert(after == Seq((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)))
+  }
+
+  test("zero-row append to a constrained table commits one version, stages nothing") {
+    val root = freshRoot()
+    val vt = sources.VersionedTable
+    vt.commit(Seq((1L, 10L)).toDF("k", "v"), root)
+    vt.addConstraint(spark, root, "v_pos", "v > 0")
+    def dataDirs() = new java.io.File(root, "data").listFiles
+      .filter(_.isDirectory).map(_.getName).toSet
+    val v0 = vt.currentVersion(spark, root)
+    // the constraint sums over zero rows are null, not 0
+    val v1 = vt.commit(Seq.empty[(Long, Long)].toDF("k", "v"), root, mode = "append")
+    assert(v1 == v0 + 1 && vt.currentVersion(spark, root) == v1)
+    assert(vt.read(spark, root).as[(Long, Long)].collect().toSeq == Seq((1L, 10L)))
+    // every data directory on disk backs a file of the current version
+    val live = vt.snapshot(spark, root).files
+      .map(f => new org.apache.hadoop.fs.Path(f).getParent.getName).toSet
+    assert(dataDirs() == live, s"on disk ${dataDirs()}, live $live")
+    // a write-path abort drops its staged directory
+    intercept[IllegalArgumentException] {
+      vt.commit(Seq((2L, -1L)).toDF("k", "v"), root, mode = "append")
+    }
+    assert(dataDirs() == live && vt.currentVersion(spark, root) == v1)
+  }
+
+  test("zero-row SQL INSERT into a CHECK-constrained catalog table bumps the version") {
+    SparkEntry.configure(spark)
+    spark.sql("DROP TABLE IF EXISTS graft.zr")
+    spark.sql("CREATE TABLE graft.zr AS SELECT CAST(1 AS BIGINT) AS k, CAST(10 AS BIGINT) AS v")
+    spark.sql("ALTER TABLE graft.zr ADD CONSTRAINT v_pos CHECK (v > 0)")
+    def cur(): Long = spark.sql(
+      "SELECT max(version) FROM vt_history('zr')").head().getLong(0)
+    val v0 = cur()
+    spark.sql("INSERT INTO graft.zr SELECT k, v FROM graft.zr WHERE k < 0")
+    assert(cur() == v0 + 1)
+    assert(spark.sql("SELECT count(*) FROM graft.zr").head().getLong(0) == 1L)
+    spark.sql("DROP TABLE IF EXISTS graft.zr")
   }
 }
